@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     ByteType,
+    DataType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -119,6 +120,23 @@ def _widened_type(a: str, b: str) -> str | None:
     if a in _FLOAT_CHAIN and b in _FLOAT_CHAIN:
         return "double"
     return None
+
+
+def _cast_to(
+    df: DataFrame, targets: dict[str, DataType], fill_missing: bool = False
+) -> DataFrame:
+    """Cast ``df``'s columns to their ``targets`` types (see
+    ``LakeTable._evolve_types``); ``fill_missing`` adds the target
+    columns ``df`` lacks as typed nulls."""
+    types = dict(df.dtypes)
+    for c, t in targets.items():
+        t = t.simpleString()
+        if c not in types:
+            if fill_missing:
+                df = df.withColumn(c, F.lit(None).cast(t))
+        elif types[c] != t:
+            df = df.withColumn(c, F.col(c).cast(t))
+    return df
 
 
 class IncompatibleSchemaChange(ValueError):
@@ -894,15 +912,7 @@ class LakeTable:
                     f"version {version} not in timeline (vacuumed?)"
                 )
             old = self.log.read(version)
-            self.log.commit(
-                "rollback",
-                old.files,
-                schema_json=old.schema_json,
-                buckets=old.buckets or self.buckets,
-                expected_version=prev.version + 1,
-                partition_fields=self.partition_fields or None,
-                global_index=self.global_index or None,
-            )
+            self._publish("rollback", prev, old.files, old.schema_json)
 
         self._with_commit_retries(attempt)
 
@@ -2317,6 +2327,78 @@ class LakeTable:
             )
         return out
 
+    def _write_data(
+        self,
+        df: DataFrame,
+        schema_json: str,
+        n_tasks: int,
+        kind: str = "base",
+        range_col: str | None = None,
+    ) -> list[FileEntry]:
+        """Write ``df`` as table data files under a fresh data subdir and
+        return their manifest entries — the one data write of every table
+        writer, as the reference's Hudi write client is its one write
+        (file layout, key bloom and manifest stats decided here alone).
+        Adds the ``_bucket``/``_part`` layout columns ``df`` lacks,
+        renames logical -> physical per ``schema_json`` (the schema about
+        to be committed), repartitions into ``n_tasks`` tasks by layout
+        and writes with the key bloom. ``range_col``: range-partition on
+        (layout, ``range_col``) and sort within partitions instead, then
+        drop it — each file owns one unit's contiguous slice (z-order
+        clustering)."""
+        cols = df.columns
+        if BUCKET_COL not in cols:
+            df = df.withColumn(
+                BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets)
+            )
+        if PARTITION_COL not in cols:
+            df = self._with_part(df)
+        layout = self._layout_cols()
+        out = self._apply_physical(df, schema_json)
+        if range_col is None:
+            out = out.repartition(n_tasks, *[F.col(c) for c in layout])
+        else:
+            out = (
+                out.repartitionByRange(
+                    n_tasks, *[F.col(c) for c in layout], F.col(range_col)
+                )
+                .sortWithinPartitions(*layout, range_col)
+                .drop(range_col)
+            )
+        absd, rel = self.log.new_data_subdir()
+        (
+            out.write.mode("append")
+            .options(**_BLOOM_OPTS)
+            .partitionBy(*layout)
+            .parquet(absd)
+        )
+        return _collect_file_entries(self.path, rel, kind=kind, spark=self.spark)
+
+    def _publish(
+        self,
+        operation: str,
+        prev,
+        files: list[FileEntry],
+        schema_json: str | None = None,
+        batch_id: str | None = None,
+    ) -> None:
+        """Publish ``files`` as the live set of the version after
+        ``prev`` (the commit the writer computed against; None for an
+        empty table) — the one commit call of every writer. A timeline
+        that moved since ``prev`` raises ``CommitConflict`` instead of
+        publishing, so ``_with_commit_retries`` recomputes the write
+        rather than dropping the other writer's files."""
+        self.log.commit(
+            operation,
+            files,
+            batch_id=batch_id,
+            schema_json=schema_json,
+            buckets=self.buckets,
+            expected_version=(prev.version + 1) if prev else 1,
+            partition_fields=self.partition_fields or None,
+            global_index=self.global_index or None,
+        )
+
     def insert(
         self,
         df: DataFrame,
@@ -2331,51 +2413,7 @@ class LakeTable:
         written as-is while the committed read schema kept the stored
         type, breaking every subsequent read of the new file."""
         self._with_commit_retries(
-            lambda: self._insert_once(df, batch_id, parallelism, operation)
-        )
-
-    def _insert_once(
-        self,
-        df: DataFrame,
-        batch_id: str | None,
-        parallelism: int,
-        operation: str,
-    ) -> None:
-        if batch_id is not None and self.log.has_batch(batch_id):
-            return
-        prev = self.log.latest()
-        next_ver = (prev.version + 1) if prev else 1
-        stored = self.schema()
-        if stored is not None:
-            df, _ = self._reconcile_batch_types(df, stored)
-        if DELETED_COL not in df.columns:
-            df = df.withColumn(DELETED_COL, F.lit(False))
-        if COMMIT_VER_COL not in df.columns:
-            df = df.withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
-        out = df.withColumn(BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets))
-        out = self._with_part(out)
-        schema_json = self._commit_schema_json(out, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        layout = [F.col(c) for c in self._layout_cols()]
-        (
-            self._apply_physical(out, schema_json)
-            .repartition(parallelism, *layout)
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, spark=self.spark)
-        carry = prev.files if prev else []
-        self.log.commit(
-            operation,
-            carry + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
+            lambda: self._append_once(df, batch_id, parallelism, operation)
         )
 
     def bulk_insert(
@@ -2412,9 +2450,8 @@ class LakeTable:
                 "insert_overwrite_table to replace an unpartitioned table"
             )
         self._with_commit_retries(
-            lambda: self._overwrite_once(
-                df, batch_id, parallelism, "insert_overwrite",
-                whole_table=False,
+            lambda: self._append_once(
+                df, batch_id, parallelism, "insert_overwrite"
             )
         )
 
@@ -2428,63 +2465,48 @@ class LakeTable:
         with the batch in one atomic commit (partitioned or not). Prior
         versions stay readable via time travel until vacuumed."""
         self._with_commit_retries(
-            lambda: self._overwrite_once(
-                df, batch_id, parallelism, "insert_overwrite_table",
-                whole_table=True,
+            lambda: self._append_once(
+                df, batch_id, parallelism, "insert_overwrite_table"
             )
         )
 
-    def _overwrite_once(
+    def _append_once(
         self,
         df: DataFrame,
         batch_id: str | None,
         parallelism: int,
         operation: str,
-        whole_table: bool,
     ) -> None:
+        """Append ``df`` as-is (no merge) in one commit. The operations
+        differ only in which live files the commit carries: all of them
+        (``insert``/``bulk_insert``), those outside the batch's
+        partitions (``insert_overwrite``), or none
+        (``insert_overwrite_table``)."""
         if batch_id is not None and self.log.has_batch(batch_id):
             return  # idempotent re-run (H5)
         prev = self.log.latest()
         next_ver = (prev.version + 1) if prev else 1
         stored = self.schema()
         if stored is not None:
-            df, _ = self._reconcile_batch_types(df, stored)
+            df = _cast_to(df, self._evolve_types(df.schema.fields, stored))
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
         if COMMIT_VER_COL not in df.columns:
             df = df.withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
         out = self._with_part(
-            df.withColumn(
-                BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets)
-            )
+            df.withColumn(BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets))
         )
         schema_json = self._commit_schema_json(out, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        (
-            self._apply_physical(out, schema_json)
-            .repartition(parallelism, *[F.col(c) for c in self._layout_cols()])
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, spark=self.spark)
-        if whole_table or prev is None:
+        new_files = self._write_data(out, schema_json, parallelism)
+        if prev is None or operation == "insert_overwrite_table":
             carry: list[FileEntry] = []
-        else:
+        elif operation == "insert_overwrite":
             replaced = {f.partition for f in new_files}
             self._require_attributable(prev.files, operation)
             carry = [f for f in prev.files if f.partition not in replaced]
-        self.log.commit(
-            operation,
-            carry + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
-        )
+        else:
+            carry = prev.files
+        self._publish(operation, prev, carry + new_files, schema_json, batch_id)
 
     def delete_partitions(
         self, partitions, batch_id: str | None = None
@@ -2513,15 +2535,7 @@ class LakeTable:
                 )
             self._require_attributable(prev.files, "delete_partition")
             carry = [f for f in prev.files if f.partition not in drop]
-            self.log.commit(
-                "delete_partition",
-                carry,
-                batch_id=batch_id,
-                buckets=self.buckets,
-                expected_version=prev.version + 1,
-                partition_fields=self.partition_fields,
-                global_index=self.global_index or None,
-            )
+            self._publish("delete_partition", prev, carry, batch_id=batch_id)
 
         self._with_commit_retries(attempt)
 
@@ -2866,6 +2880,17 @@ class LakeTable:
             BUCKET_COL, bucket_expr(F.col(KEY_COL), self.buckets)
         )
         batch = self._with_part(batch)
+        # the merge derives _deleted/_commit_ver itself: the batch's own
+        # copies (if any) take no part in schema evolution
+        stored = self.schema()
+        targets = self._evolve_types(
+            [
+                f
+                for f in batch.schema.fields
+                if f.name not in (DELETED_COL, COMMIT_VER_COL)
+            ],
+            stored,
+        )
         # Selective COW: only buckets containing batch keys are touched.
         # On partitioned tables the unit is (partition, bucket) — a batch
         # touching one day never rewrites another day's files. The unit
@@ -2966,8 +2991,7 @@ class LakeTable:
         # every live file unchanged. Publish that commit directly. The
         # schema still evolves exactly as an empty batch evolves it
         # today (additive columns + type widening come from the batch's
-        # DTYPES, not its rows — ``_empty_merge_schema_json`` runs the
-        # same widening rules and raises the same errors). Skipped when
+        # DTYPES, not its rows — the same ``targets``). Skipped when
         # live bootstrap files exist: an empty merge must still convert
         # bloom-less bootstrap files into bucketed state (they are hit
         # candidates for ANY key set).
@@ -2977,19 +3001,15 @@ class LakeTable:
             and affected_buckets is None
             and not affected
             and not units
-            and self.schema() is not None
+            and stored is not None
             and not any(f.kind == BOOTSTRAP_KIND for f in prev.files)
         ):
-            next_ver = prev.version + 1
-            self.log.commit(
+            self._publish(
                 "merge",
+                prev,
                 list(prev.files),
-                batch_id=batch_id,
-                schema_json=self._empty_merge_schema_json(batch, next_ver),
-                buckets=self.buckets,
-                expected_version=next_ver,
-                partition_fields=self.partition_fields or None,
-                global_index=self.global_index or None,
+                self._empty_merge_schema_json(targets, prev.version + 1),
+                batch_id,
             )
             return
         if mode == "mor" and prev is not None:
@@ -3003,7 +3023,9 @@ class LakeTable:
                     "files; merge-on-read requires hash-bucketed state — "
                     "use mode='cow' or compact() first"
                 )
-            self._merge_mor(batch, batch_id, parallelism, affected, prev)
+            self._merge_mor(
+                batch, batch_id, parallelism, affected, prev, targets
+            )
             return
         live = prev.files if prev else []
         if units is not None:
@@ -3039,7 +3061,7 @@ class LakeTable:
         hit = forced + kept
         carry += skipped
 
-        if self.schema() is not None:
+        if stored is not None:
             snap = self._read_files(hit)  # logical view (column mapping)
             if any(f.kind == "delta" for f in hit) or self.global_index:
                 # COW over MOR deltas: collapse to latest-per-key before
@@ -3053,43 +3075,12 @@ class LakeTable:
             snap = None
 
         next_ver = (prev.version + 1) if prev else 1
-        payload_cols = [
-            c
-            for c in batch.columns
-            if c not in (
-                OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL,
-            )
-        ]
+        payload_cols = list(targets)
         if snap is not None:
-            # additive schema evolution: union of payload columns
-            for c in snap.columns:
-                if c not in payload_cols and c not in (
-                    BUCKET_COL, DELETED_COL, COMMIT_VER_COL,
-                ):
-                    payload_cols.append(c)
-            b = batch
-            s = snap
-            b_types, s_types = dict(batch.dtypes), dict(snap.dtypes)
-            for c in payload_cols:
-                if c not in b.columns:
-                    b = b.withColumn(c, F.lit(None).cast(s_types[c]))
-                elif c not in s.columns:
-                    s = s.withColumn(c, F.lit(None).cast(b_types[c]))
-                elif b_types[c] != s_types[c]:
-                    # type widening (in-band schema evolution): cast both
-                    # sides to the read-compatible supertype, or reject
-                    target = _widened_type(b_types[c], s_types[c])
-                    if target is None:
-                        raise IncompatibleSchemaChange(
-                            f"column {c!r} of table at {self.path}: "
-                            f"stored type {s_types[c]} and incoming type "
-                            f"{b_types[c]} have no widening; rewrite the "
-                            "table to change types incompatibly"
-                        )
-                    if b_types[c] != target:
-                        b = b.withColumn(c, F.col(c).cast(target))
-                    if s_types[c] != target:
-                        s = s.withColumn(c, F.col(c).cast(target))
+            # schema evolution: both sides cast to the targets, each
+            # side's missing columns filled with typed nulls
+            b = _cast_to(batch, targets, fill_missing=True)
+            s = _cast_to(snap, targets, fill_missing=True)
             if COMMIT_VER_COL not in s.columns:  # pre-versioning files
                 s = s.withColumn(COMMIT_VER_COL, F.lit(0).cast("long"))
             # record identity on partitioned tables is (partition, key) —
@@ -3158,59 +3149,46 @@ class LakeTable:
 
         merged = self._with_part(merged)
         schema_json = self._commit_schema_json(merged, next_ver)
-        absd, rel = self.log.new_data_subdir()
         n = parallelism or max(
             1, len(units) if units is not None else len(affected)
         )
-        layout = [F.col(c) for c in self._layout_cols()]
-        (
-            self._apply_physical(merged, schema_json)
-            .repartition(n, *layout)
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
-        )
-        new_files = _collect_file_entries(self.path, rel, spark=self.spark)
-        self.log.commit(
-            "merge",
-            carry + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
-        )
+        new_files = self._write_data(merged, schema_json, n)
+        self._publish("merge", prev, carry + new_files, schema_json, batch_id)
 
-    def _reconcile_batch_types(
-        self, b: DataFrame, stored: StructType
-    ) -> tuple[DataFrame, dict[str, str]]:
-        """In-band type evolution shared by every write path: cast batch
-        columns to the read-compatible supertype of (incoming, stored),
-        raise on changes with no widening. Returns the cast batch and a
-        {column: widened dtype} map for columns whose STORED type must
-        widen in the committed schema."""
-        s_types = {f.name: f.dataType.simpleString() for f in stored.fields}
-        widened: dict[str, str] = {}
-        for c, t in dict(b.dtypes).items():
+    def _evolve_types(
+        self, incoming: list[StructField], stored: StructType | None
+    ) -> dict[str, DataType]:
+        """The table's one schema-evolution rule, shared by every writer:
+        {column: target DataType} over the union of the incoming fields
+        (in order; the transient ``_op``/``_bucket``/``_part`` columns
+        excluded) and the stored fields they lack (``_deleted`` and
+        ``_commit_ver`` excluded — writers derive those). A new column
+        keeps its incoming type, a stored-only one its stored type, and
+        a shared one takes the read-compatible supertype of both; a
+        shared pair with no widening raises ``IncompatibleSchemaChange``."""
+        s_fields = {f.name: f for f in stored.fields} if stored is not None else {}
+        out: dict[str, DataType] = {}
+        for f in incoming:
+            c = f.name
             if c in (OP_COL, BUCKET_COL, PARTITION_COL):
                 continue
-            st = s_types.get(c)
-            if st is not None and st != t:
-                target = _widened_type(t, st)
-                if target is None:
-                    raise IncompatibleSchemaChange(
-                        f"column {c!r} of table at {self.path}: stored "
-                        f"type {st} and incoming type {t} have no "
-                        "widening; rewrite the table to change types "
-                        "incompatibly"
-                    )
-                if t != target:
-                    b = b.withColumn(c, F.col(c).cast(target))
-                if st != target:
-                    widened[c] = target
-        return b, widened
+            sf = s_fields.get(c)
+            if sf is None:
+                out[c] = f.dataType
+                continue
+            t, st = f.dataType.simpleString(), sf.dataType.simpleString()
+            target = _widened_type(t, st)
+            if target is None:
+                raise IncompatibleSchemaChange(
+                    f"column {c!r} of table at {self.path}: stored type "
+                    f"{st} and incoming type {t} have no widening; rewrite "
+                    "the table to change types incompatibly"
+                )
+            out[c] = sf.dataType if t == st else _SPARK_TYPE_BY_NAME[target]
+        for c, sf in s_fields.items():
+            if c not in out and c not in (DELETED_COL, COMMIT_VER_COL):
+                out[c] = sf.dataType
+        return out
 
     def _commit_schema_json(self, df: DataFrame, next_ver: int) -> str:
         """Committed schema after a write: active stored fields with
@@ -3265,54 +3243,19 @@ class LakeTable:
             fields.append(StructField(c, by_name[c].dataType, True, md))
         return StructType(fields).json()
 
-    def _empty_merge_schema_json(self, batch: DataFrame, next_ver: int) -> str:
-        """Commit schema for a COW merge whose batch produced ZERO rows —
-        the schema the full merge plan would have committed, derived
-        driver-side. An empty batch still evolves the schema exactly as
-        a non-empty one does (evolution reads the batch's DTYPES, never
-        its rows): additive columns append, widenable type changes widen
-        the stored type, and incompatible changes raise the same
-        ``IncompatibleSchemaChange``. Mirrors ``_merge_once``'s payload
-        union + widening loop over ``(batch, active schema)`` and feeds
-        the same ``_commit_schema_json_fields`` the merged frame's
-        schema would have fed."""
-        full = self._stored_schema()
-        stored = self.schema()
-        b_fields = {f.name: f for f in batch.schema.fields}
-        meta = (OP_COL, BUCKET_COL, PARTITION_COL, DELETED_COL, COMMIT_VER_COL)
-        payload = [c for c in batch.columns if c not in meta]
-        for f in stored.fields:
-            if f.name not in payload and f.name not in (
-                BUCKET_COL, DELETED_COL, COMMIT_VER_COL,
-            ):
-                payload.append(f.name)
-        s_types = {f.name: f for f in stored.fields}
-        out: list[StructField] = []
-        for c in payload:
-            bf, sf = b_fields.get(c), s_types.get(c)
-            if bf is None:
-                out.append(StructField(c, sf.dataType, True))
-            elif sf is None:
-                out.append(StructField(c, bf.dataType, True))
-            else:
-                bt, st = bf.dataType.simpleString(), sf.dataType.simpleString()
-                if bt == st:
-                    out.append(StructField(c, sf.dataType, True))
-                else:
-                    target = _widened_type(bt, st)
-                    if target is None:
-                        raise IncompatibleSchemaChange(
-                            f"column {c!r} of table at {self.path}: "
-                            f"stored type {st} and incoming type "
-                            f"{bt} have no widening; rewrite the "
-                            "table to change types incompatibly"
-                        )
-                    out.append(
-                        StructField(c, _SPARK_TYPE_BY_NAME[target], True)
-                    )
-        out.append(StructField(DELETED_COL, BooleanType(), True))
-        out.append(StructField(COMMIT_VER_COL, LongType(), True))
-        return self._commit_schema_json_fields(out, full, next_ver)
+    def _empty_merge_schema_json(
+        self, targets: dict[str, DataType], next_ver: int
+    ) -> str:
+        """Commit schema for a COW merge whose batch produced ZERO rows,
+        built from the merge's ``_evolve_types`` targets without a Spark
+        job: the columns and types the merge plan would have written."""
+        out = [StructField(c, t, True) for c, t in targets.items()] + [
+            StructField(DELETED_COL, BooleanType(), True),
+            StructField(COMMIT_VER_COL, LongType(), True),
+        ]
+        return self._commit_schema_json_fields(
+            out, self._stored_schema(), next_ver
+        )
 
     def _apply_physical(self, df: DataFrame, schema_json: str) -> DataFrame:
         """Rename logical -> physical columns per the schema about to be
@@ -3391,15 +3334,7 @@ class LakeTable:
                         f"__dropped_v{next_ver}__{a}", f.dataType, True, md
                     )
                 )
-        self.log.commit(
-            "alter",
-            prev.files,
-            schema_json=StructType(fields).json(),
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
-        )
+        self._publish("alter", prev, prev.files, StructType(fields).json())
 
     def _merge_mor(
         self,
@@ -3408,10 +3343,11 @@ class LakeTable:
         parallelism: int | None,
         affected: set[int],
         prev,
+        targets: dict[str, DataType],
     ) -> None:
         """Merge-on-read write path: append the (pre-deduped) batch as
-        delta files, touch NO existing data. Schema evolution follows the
-        same rules as COW (additive union + read-compatible widening).
+        delta files, touch NO existing data. The batch is cast to the
+        merge's schema-evolution ``targets``.
 
         On a GLOBAL-INDEX table the append is preceded by one bounded
         read of the affected buckets' live copies (bloom-pruned — the
@@ -3424,12 +3360,11 @@ class LakeTable:
         payload and _ts — so partition-pruned reads of the old partition
         stay correct without consulting any other partition."""
         next_ver = prev.version + 1
-        stored = self.schema()
         b = batch
         for c in (DELETED_COL, COMMIT_VER_COL):
             if c in b.columns:
                 b = b.drop(c)
-        b, _ = self._reconcile_batch_types(b, stored)
+        b = _cast_to(b, targets)
         delta = (
             b.withColumn(DELETED_COL, F.col(OP_COL) == DELETE_OP)
             .withColumn(COMMIT_VER_COL, F.lit(next_ver).cast("long"))
@@ -3479,27 +3414,12 @@ class LakeTable:
                 )
                 delta = out.unionByName(tombs, allowMissingColumns=True)
         schema_json = self._commit_schema_json(delta, next_ver)
-        absd, rel = self.log.new_data_subdir()
-        n = parallelism or max(1, len(affected))
-        layout = [F.col(c) for c in self._layout_cols()]
-        (
-            self._apply_physical(delta, schema_json)
-            .repartition(n, *layout)
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*self._layout_cols())
-            .parquet(absd)
+        new_files = self._write_data(
+            delta, schema_json, parallelism or max(1, len(affected)),
+            kind="delta",
         )
-        new_files = _collect_file_entries(self.path, rel, kind="delta", spark=self.spark)
-        self.log.commit(
-            "merge",
-            prev.files + new_files,
-            batch_id=batch_id,
-            schema_json=schema_json,
-            buckets=self.buckets,
-            expected_version=next_ver,
-            partition_fields=self.partition_fields or None,
-            global_index=self.global_index or None,
+        self._publish(
+            "merge", prev, prev.files + new_files, schema_json, batch_id
         )
 
     # Above this many distinct batch keys the per-merge bloom probe is
@@ -3514,14 +3434,13 @@ class LakeTable:
     MERGE_UNITS_MAX = 100_000
 
     def _probe_would_gate(self, files: list) -> bool:
-        """Driver-metadata-only preview of ``_bloom_prune_hit_files``'s
-        gate over a candidate live set: True when a COW merge into this
-        state could probe (some bloom-carrying, non-delta-bucket bucket
-        holds more than one live file, or a bloom-carrying bootstrap
-        file exists). A True here lets ``_merge_once`` fuse the probe's
-        key collect with the affected-unit collect into one Spark job;
-        a conservative False only costs falling back to the two
-        separate collects (the pre-r13 behavior)."""
+        """The bloom probe's gate over a file list, from manifest
+        metadata alone: True when some file carries a bloom and, outside buckets
+        holding a delta, either a bootstrap file is present or a bucket
+        holds more than one file. ``_bloom_prune_hit_files`` gates on it
+        over the hit files; ``_merge_once`` asks it over the live set to
+        fuse the probe's key collect with the affected-unit collect into
+        one Spark job."""
         if not any(f.bloom for f in files):
             return False
         delta_buckets = {f.bucket for f in files if f.kind == "delta"}
@@ -3557,13 +3476,7 @@ class LakeTable:
         per-batch overhead; with multiple files per bucket (insert
         accumulation, bloom-carried files) it is the read-amplification
         fix."""
-        if not any(f.bloom for f in hit):
-            return hit, []
-        has_boot = any(f.kind == BOOTSTRAP_KIND for f in hit)
-        per_bucket: dict[int, int] = {}
-        for f in hit:
-            per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-        if not has_boot and all(n <= 1 for n in per_bucket.values()):
+        if not self._probe_would_gate(hit):
             return hit, []
         rows = probe_rows
         if rows is None:

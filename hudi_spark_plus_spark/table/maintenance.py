@@ -19,12 +19,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from hudi_spark_plus_spark.table.keygen import BUCKET_COL, KEY_COL, bucket_expr
-from hudi_spark_plus_spark.table.lake_table import (
-    _BLOOM_OPTS,
-    LakeTable,
-    _collect_file_entries,
-)
+from hudi_spark_plus_spark.table.lake_table import LakeTable
 
 
 def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
@@ -37,35 +32,12 @@ def compact(lake: LakeTable, target_files_per_bucket: int = 1) -> dict:
         prev = lake.log.latest()
         if prev is None:
             return {"files_before": 0, "files_after": 0}
-        snap = lake.snapshot(include_deleted=True)
-        out = lake._apply_physical(  # files store physical column names
-            lake._with_part(
-                snap.withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
-                )
-            ),
+        files = lake._write_data(
+            lake.snapshot(include_deleted=True),
             prev.schema_json,
+            max(1, lake.buckets * target_files_per_bucket),
         )
-        absd, rel = lake.log.new_data_subdir()
-        layout = lake._layout_cols()
-        (
-            out.repartition(
-                max(1, lake.buckets * target_files_per_bucket),
-                *[F.col(c) for c in layout],
-            )
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)  # keep the key bloom through rewrites
-            .partitionBy(*layout)
-            .parquet(absd)
-        )
-        files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-        lake.log.commit(
-            "compact",
-            files,
-            schema_json=prev.schema_json,
-            expected_version=prev.version + 1,
-            partition_fields=lake.partition_fields or None,
-        )
+        lake._publish("compact", prev, files, prev.schema_json)
         return {"files_before": len(prev.files), "files_after": len(files)}
 
     return lake._with_commit_retries(attempt)
@@ -111,35 +83,11 @@ def compact_buckets(
         df = lake._read_files(hit)
         if any(f.kind == "delta" for f in hit):
             df = lake._resolve_latest(df)
-        out = lake._apply_physical(  # files store physical column names
-            lake._with_part(
-                df.withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
-                )
-            ),
-            prev.schema_json,
-        )
-        absd, rel = lake.log.new_data_subdir()
-        layout = lake._layout_cols()
         n_units = len(units) if units is not None else len(buckets)
-        (
-            out.repartition(
-                max(1, n_units * target_files_per_bucket),
-                *[F.col(c) for c in layout],
-            )
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*layout)
-            .parquet(absd)
+        files = lake._write_data(
+            df, prev.schema_json, max(1, n_units * target_files_per_bucket)
         )
-        files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-        lake.log.commit(
-            "compact",
-            carry + files,
-            schema_json=prev.schema_json,
-            expected_version=prev.version + 1,
-            partition_fields=lake.partition_fields or None,
-        )
+        lake._publish("compact", prev, carry + files, prev.schema_json)
         return {
             "buckets_compacted": n_units,
             "files_before": len(hit),
@@ -237,11 +185,10 @@ def rewrite_column_type(
     IN-BAND because carried files of untouched buckets would keep the
     old physical type and poison vectorized reads; the only correct
     form is a rewrite of every live file, which is a scheduled
-    maintenance decision, never an ingest side effect. Mirrors
-    ``compact``: one pass over the snapshot (tombstones included, MOR
-    deltas folded), same bucket/partition layout, one commit replacing
-    the full file set; physical column names are unchanged, so column
-    mapping is untouched.
+    maintenance decision, never an ingest side effect. One pass over
+    the snapshot (tombstones included, MOR deltas folded), one commit
+    replacing the full file set; physical column names are unchanged,
+    so column mapping is untouched.
 
     LOSSLESS BY PROOF per row: before writing, every non-null value
     must survive the round trip ``cast(cast(v AS new) AS old) == v``
@@ -321,33 +268,11 @@ def rewrite_column_type(
                 for f in stored.fields
             ]
         )
-        out = lake._apply_physical(
-            lake._with_part(
-                snap.withColumn(col, casted).withColumn(
-                    BUCKET_COL, bucket_expr(F.col(KEY_COL), lake.buckets)
-                )
-            ),
-            new_schema.json(),
+        files = lake._write_data(
+            snap.withColumn(col, casted), new_schema.json(),
+            max(1, lake.buckets),
         )
-        absd, rel = lake.log.new_data_subdir()
-        layout = lake._layout_cols()
-        (
-            out.repartition(
-                max(1, lake.buckets), *[F.col(c) for c in layout]
-            )
-            .write.mode("append")
-            .options(**_BLOOM_OPTS)
-            .partitionBy(*layout)
-            .parquet(absd)
-        )
-        files = _collect_file_entries(lake.path, rel, spark=lake.spark)
-        lake.log.commit(
-            "retype",
-            files,
-            schema_json=new_schema.json(),
-            expected_version=prev.version + 1,
-            partition_fields=lake.partition_fields or None,
-        )
+        lake._publish("retype", prev, files, new_schema.json())
         return {
             "files_before": len(prev.files),
             "files_after": len(files),

@@ -2884,3 +2884,58 @@ class TestEmptyMergeFastPath:
         t.merge(self._empty(spark), "b1", mode="mor")
         assert t.log.latest().version == 2
         assert snap_dict(t) == {"k1": (1, "a")}
+
+
+_EVOLVE_SEED = "_key string, _ts long, _op string, val string, n int"
+_EVOLVE_CASES = {
+    # case -> (incoming payload schema, incoming payload row, rejected?)
+    "added_column": ("val string, n int, extra string", ("b", 2, "e"), False),
+    "int_to_bigint": ("val string, n bigint", ("b", 2), False),
+    "string_to_bigint": ("val bigint, n int", (7, 2), True),
+}
+
+
+def _evolve_write(spark, t, writer, payload_schema, payload_row):
+    if writer in ("insert", "insert_overwrite_table"):
+        df = spark.createDataFrame(
+            [("k2", 2, *payload_row)], f"_key string, _ts long, {payload_schema}"
+        )
+        getattr(t, writer)(df, "b1")
+        return
+    rows = [] if writer == "empty_cow_merge" else [("k2", 2, "upsert", *payload_row)]
+    df = spark.createDataFrame(
+        rows, f"_key string, _ts long, _op string, {payload_schema}"
+    )
+    t.merge(df, "b1", mode="mor" if writer == "mor_merge" else "cow")
+
+
+@pytest.mark.parametrize("case", sorted(_EVOLVE_CASES))
+def test_schema_evolution_agrees_across_writers(spark, tmp_path, case):
+    """Every writer applies the one schema-evolution rule: the same
+    incoming schema commits byte-identical schema JSON whichever path
+    writes it, and a change with no widening raises the same
+    IncompatibleSchemaChange from each."""
+    from hudi_spark_plus_spark.table.lake_table import IncompatibleSchemaChange
+
+    payload_schema, payload_row, rejected = _EVOLVE_CASES[case]
+    writers = [
+        "cow_merge", "mor_merge", "empty_cow_merge", "insert",
+        "insert_overwrite_table",
+    ]
+    outcomes = {}
+    for w in writers:
+        t = LakeTable(spark, str(tmp_path / w), buckets=2)
+        t.merge(
+            spark.createDataFrame([("k1", 1, "upsert", "a", 1)], _EVOLVE_SEED),
+            "b0",
+        )
+        try:
+            _evolve_write(spark, t, w, payload_schema, payload_row)
+        except IncompatibleSchemaChange as e:
+            outcomes[w] = ("raised", str(e).replace(t.path, "<table>"))
+            assert t.log.latest().version == 1, w
+        else:
+            outcomes[w] = ("schema", t.log.latest().schema_json)
+    assert all(o[0] == ("raised" if rejected else "schema")
+               for o in outcomes.values()), outcomes
+    assert len(set(outcomes.values())) == 1, outcomes

@@ -70,6 +70,22 @@ class TestStoreLifecycle:
         ).collect()
         assert [(r["new_id"], r["dup_id"]) for r in pairs] == [(101, 2)]
 
+    def test_replayed_ingest_skips_signature_build(
+        self, spark, store, monkeypatch
+    ):
+        """A replayed batch_id returns before the minhash/banding frame
+        is built and checkpointed — the merge would drop it anyway."""
+        corpus = docs(spark, CORPUS)
+        store.ingest(corpus, "doc_id", "text", "b1")
+        version = store.table.log.latest().version
+
+        def boom(*args, **kwargs):
+            raise AssertionError("replayed ingest built signatures")
+
+        monkeypatch.setattr(store, "_sig_rows", boom)
+        store.ingest(corpus, "doc_id", "text", "b1")
+        assert store.table.log.latest().version == version
+
     def test_prune_is_delta_sized_and_stops_matches(self, spark, store):
         corpus = docs(spark, CORPUS)
         store.ingest(corpus, "doc_id", "text", "b1")

@@ -87,6 +87,51 @@ def test_zorder_cluster_table_preserves_data(spark, tmp_path):
     assert {r["val"] for r in lake.snapshot().where(F.col("_key") == "k5").collect()} == {"v5x"}
 
 
+def test_cluster_racing_merge_loses_nothing(spark, tmp_path, monkeypatch):
+    """A merge that commits while clustering rewrites the table must
+    survive: clustering publishes against the version it read, so the
+    race makes it conflict and re-cluster the new state. Committing the
+    stale file set instead would drop the racer's rows while its
+    batch_id stays recorded — a replay would then be a no-op and the
+    rows lost for good."""
+    from hudi_spark_plus_spark.table import lake_table
+
+    schema = "_key string, _ts long, _op string, val string, a int, b int"
+    path = str(tmp_path / "t")
+    lake = LakeTable(spark, path, buckets=2)
+    lake.merge(
+        spark.createDataFrame(
+            [(f"k{i}", 1, "upsert", f"v{i}", i, 9 - i) for i in range(10)],
+            schema,
+        ),
+        "b0",
+    )
+    other = LakeTable(spark, path)
+    orig = lake_table._collect_file_entries
+    raced = []
+
+    def racing_collect(*args, **kwargs):
+        if not raced:  # first call: clustering's own write, pre-publish
+            raced.append(True)
+            other.merge(
+                spark.createDataFrame(
+                    [("racer", 1, "upsert", "r", 0, 0)], schema
+                ),
+                "race",
+            )
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(lake_table, "_collect_file_entries", racing_collect)
+    zorder_cluster_table(lake, "a", "b")
+    lake.log.invalidate()
+    assert [lake.log.read(v).operation for v in lake.log.versions()] == [
+        "merge", "merge", "cluster",
+    ]
+    assert lake.log.has_batch("race")
+    keys = {r["_key"] for r in lake.snapshot().collect()}
+    assert keys == {f"k{i}" for i in range(10)} | {"racer"}
+
+
 def test_zvalue_plan_has_no_global_window(spark, sf_dir):
     """The r1 implementation rank-normalized through a no-partition
     percent_rank window — a single-task global sort of the whole table.
